@@ -344,17 +344,16 @@ object Similarity {
     * is O(N·k) vector distances; when a deployment sizes k ∝ N to hold
     * cell population constant (the SemDeDup / IVF discipline), brute
     * force turns quadratic in N — measured as 132 s of a 130 s
-    * density-preserving semdedup run at N = 200k, k = 1501
-    * (ProbeDensityScale; SCALING.md). Route (the faiss-style IVF recipe
-    * applied to assignment): (1) cluster the k CENTROIDS into `groups`
-    * (default ⌈√k⌉) coarse groups — one k-means over the centroid table,
-    * k rows, never the corpus; (2) per vector, pick the `nprobe` nearest
-    * group representatives (O(√k)); (3) exact argmin over the probed
-    * groups' member centroids (O(nprobe·k/groups) expected). The coarse
-    * level rides a 1-row √k-rep broadcast pack ([[assignNarrow]]'s
-    * shape). The FINE level is size-dispatched on the index bytes
-    * (k·d·4), the [[semDedupSkewSafe]] escape pattern applied to
-    * broadcast objects:
+    * density-preserving semdedup run at N = 200k, k = 1501 (SCALING.md
+    * "Density-preserving demonstration (round 9)"). Route (the faiss-style
+    * IVF recipe applied to assignment): (1) cluster the k CENTROIDS into
+    * `groups` (default ⌈√k⌉) coarse groups — one k-means over the centroid
+    * table, k rows, never the corpus; (2) per vector, pick the `nprobe`
+    * nearest group representatives (O(√k)); (3) exact argmin over the
+    * probed groups' member centroids (O(nprobe·k/groups) expected). The
+    * coarse level rides a 1-row √k-rep broadcast pack ([[assignNarrow]]'s
+    * shape). The FINE level is size-dispatched on the index bytes (k·d·4),
+    * the [[semDedupSkewSafe]] escape pattern applied to broadcast objects:
     *
     *   - index ≤ `shardBytes` (default 1 MiB): all members collapse into
     *     one group→members map ROW — a harmless single object at this
@@ -362,7 +361,7 @@ object Similarity {
     *     broadcast, no checkpoint barrier; 2.7 vs 4.3 s on the sf0.1
     *     16-centroid 4 KB-index bench query). The crossover sits BELOW
     *     2 MB: at a 2 MB index the sharded form already runs 1.8×
-    *     faster on a 500-row corpus (ProbeIvfBroadcast, d = 1024), and
+    *     faster on a 500-row corpus (d = 1024; NOTES.md round 10), and
     *     bigger corpora amortize the extra join stages further, so the
     *     1 MiB default is conservative toward the map form.
     *   - index > `shardBytes`: SHARDED — one packed row PER coarse group
@@ -372,15 +371,16 @@ object Similarity {
     *     applies per GROUP pack (k·d/groups floats), so the operator
     *     survives the k ∝ N regime it exists for (millions of centroids
     *     × wide embeddings) where the monolithic map row OOMs first —
-    *     ProbeIvfBroadcast measured the map form DEAD
-    *     (OutOfMemoryError) at a 134 MB index in the heap the sharded
-    *     form completes in, and already 1.8× slower at 34 MB. The
-    *     nprobe join right sides are the same plan subtree, so exchange
-    *     reuse ships ONE broadcast of the k members, not nprobe.
+    *     the map form was measured DEAD (OutOfMemoryError; SCALING.md
+    *     "IVF assignment index-broadcast probe (round 10)") at a 134 MB
+    *     index in the heap the sharded form completes in, and already
+    *     1.8× slower at 34 MB. The nprobe join right sides are the
+    *     same plan subtree, so exchange reuse ships ONE broadcast of the
+    *     k members, not nprobe.
     *
     * Both forms are spec-pinned assignment-identical (exhaustive AND
-    * small nprobe); `shardBytes = 0` forces sharding (the plan pins and
-    * the probe use this). Works unchanged on a streaming frame
+    * small nprobe); `shardBytes = 0` forces sharding (the plan pins
+    * use this). Works unchanged on a streaming frame
     * (stream-static joins under a static centroid table).
     *
     * Recall contract (standard IVF): the result is the true nearest
@@ -471,17 +471,18 @@ object Similarity {
     (repsPacked, groupPacks)
   }
 
-  /** The small-index fine level ([[assignToCentroidsIvf]] dispatch, and
-    * directly callable for probes): ALL k members collapse into a single
+  /** The small-index fine level ([[assignToCentroidsIvf]] dispatch):
+    * ALL k members collapse into a single
     * group→members map ROW, broadcast whole. Correct, oracled, and the
     * fastest shape while the one map value — O(k·d) — is genuinely
     * small; past `shardBytes` it is the single-object scale ceiling the
-    * sharded form removes (ProbeIvfBroadcast: OOM at a 134 MB index in
-    * the heap the sharded form completes in). Spec-pinned
+    * sharded form removes (OOM at a 134 MB index in the heap the sharded
+    * form completes in; SCALING.md "IVF assignment index-broadcast
+    * probe (round 10)"). Spec-pinned
     * assignment-identical to the sharded form at exhaustive AND small
     * nprobe.
     */
-  private[graft] def assignToCentroidsIvfMonolithic(corpus: DataFrame,
+  private def assignToCentroidsIvfMonolithic(corpus: DataFrame,
       emb: String, centroids: DataFrame, nprobe: Int = 4,
       groups: Int = 0, kKnown: Long = -1L): DataFrame = {
     val k = if (kKnown >= 0) kKnown else centroids.count()
@@ -842,7 +843,8 @@ object Similarity {
   /** [[semDedupSkewSafe]] from a PRE-ASSIGNED (id, emb, cell) frame —
     * the composition point for [[assignToCentroidsIvf]] when the
     * centroid count scales with the corpus (brute-force assignment is
-    * then the quadratic term, not the pair verify — ProbeDensityScale),
+    * then the quadratic term, not the pair verify — SCALING.md
+    * "Density-preserving demonstration (round 9)"),
     * and for reusing a persisted assignment across dedup runs.
     */
   def semDedupSkewSafeAssigned(preAssigned: DataFrame, id: String,

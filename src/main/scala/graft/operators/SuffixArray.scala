@@ -66,19 +66,6 @@ object SuffixArray {
       outCol: String, buckets: Int): DataFrame =
     denseNumberCounted(df, keys, outCol, buckets)._1
 
-  /** [[denseNumber]] plus the total class count (the global max of
-    * `outCol`). The count falls out of the partition-bases pass the
-    * numbering already runs — per-partition class counts are ≤ `buckets`
-    * rows, so they are collected, cumulated on the driver, and joined
-    * back as a literal broadcast frame. Loop callers that gate on "every
-    * class is a singleton" ([[suffixRanksAll]]) get the convergence
-    * check for free instead of re-scanning the numbered output.
-    */
-  private[graft] def denseNumberCounted(df: DataFrame, keys: Seq[Column],
-      outCol: String, buckets: Int): (DataFrame, Long) = {
-    denseNumberCountedImpl(df, keys, outCol, buckets)
-  }
-
   /** [[denseNumberCounted]] for inputs whose FIRST sort key is already a
     * dense 1-based long rank with a known class count `primaryClasses` —
     * the construction loop's case, where each round re-numbers tuples
@@ -119,7 +106,7 @@ object SuffixArray {
   private[graft] def denseNumberDenseCounted(df: DataFrame, primary: Column,
       primaryClasses: Long, keys: Seq[Column], outCol: String,
       buckets: Int, keep: Seq[Column] = Nil): (DataFrame, Long) =
-    denseNumberCountedImpl(df, keys, outCol, buckets,
+    denseNumberCounted(df, keys, outCol, buckets,
       densePrimary = Some((primary, primaryClasses)), keep = keep)
 
   /** The pre-checkpoint stage of the dense-primary numbering (bucket
@@ -148,7 +135,16 @@ object SuffixArray {
         Window.partitionBy(col("_dnP")).orderBy(keys: _*)).cast("long"))
   }
 
-  private def denseNumberCountedImpl(df: DataFrame, keys: Seq[Column],
+  /** [[denseNumber]] plus the total class count (the global max of
+    * `outCol`). The count falls out of the partition-bases pass the
+    * numbering already runs — per-partition class counts are ≤ `buckets`
+    * rows, so they are collected, cumulated on the driver, and joined
+    * back as a literal broadcast frame. Loop callers that gate on "every
+    * class is a singleton" ([[suffixRanksAll]]) get the convergence
+    * check for free instead of re-scanning the numbered output.
+    * `densePrimary` and `keep` are the [[denseNumberDenseCounted]] form.
+    */
+  private[graft] def denseNumberCounted(df: DataFrame, keys: Seq[Column],
       outCol: String, buckets: Int,
       densePrimary: Option[(Column, Long)] = None,
       keep: Seq[Column] = Nil): (DataFrame, Long) = {
@@ -215,20 +211,14 @@ object SuffixArray {
     def step(j: Int): Long = 1L << (2 * j)
   }
 
-  private[graft] def suffixRanksAll(docs: DataFrame, id: String,
-      text: String, buckets: Int, maxPrefix: Long = Long.MaxValue): Ranked =
-    suffixRanksRadix(docs, id, text, buckets, maxPrefix, radix = 4)
-
-  /** Radix-parametrized construction core. Radix 4 is the production
-    * shape (every consumer of `Ranked.levels` assumes the 4^j level
-    * spacing); other radices exist for the measured construction probe
-    * ONLY (NOTES.md round 8: radix 8 = 7 chained shifts/round was
-    * predicted and measured slower) — their `full` ranks are identical
-    * (spec-pinned) but their levels MUST NOT feed the LCP walk.
+  /** Construction radix: every consumer of `Ranked.levels` (the LCP
+    * walk, [[Ranked.step]]) assumes the 4^j level spacing. Radix 8 (7
+    * chained shifts a round) was measured slower (NOTES.md round 8).
     */
-  private[graft] def suffixRanksRadix(docs: DataFrame, id: String,
-      text: String, buckets: Int, maxPrefix: Long, radix: Int): Ranked = {
-    require(radix >= 2, s"need radix >= 2, got $radix")
+  private val Radix = 4
+
+  private[graft] def suffixRanksAll(docs: DataFrame, id: String,
+      text: String, buckets: Int, maxPrefix: Long = Long.MaxValue): Ranked = {
     val tok = tokens(docs, id, text).localCheckpoint(true)
     val n = tok.count()
     val b = if (buckets > 0) buckets else autoBuckets(n, tok)
@@ -280,13 +270,13 @@ object SuffixArray {
       // partitioning no longer counts as co-partitioned), i.e. 6
       // corpus-sized exchanges per round. The window is NOT free — cur is
       // a localCheckpoint whose LogicalRDD reports UnknownPartitioning on
-      // this Spark (plan-verified, ProbeSortedCheckpoint), so the window
+      // this Spark (plan-verified, OPTIMIZATION_r13.md), so the window
       // pays ONE hash(doc) exchange per round — but one exchange replaces
       // the former six. An off-the-end lead is NULL → coalesce 0, the
       // shared end-sentinel, exactly as the left joins produced.
       val byDoc = Window.partitionBy(col("doc")).orderBy(col("off"))
       val j = cur.select(Seq(col("doc"), col("off"), col("rank")) ++
-        (1 until radix).map { i =>
+        (1 until Radix).map { i =>
           val sh = i.toLong * k
           // a shift past any real doc length can only yield the sentinel
           (if (sh <= Int.MaxValue && sh < maxLen)
@@ -308,13 +298,13 @@ object SuffixArray {
       // join + project per read costs more than the narrow second write
       val (numbered, classes) = denseNumberDenseCounted(j,
         col("rank"), prevClasses,
-        col("rank") +: (1 until radix).map(i => col(s"_saZ$i")),
+        col("rank") +: (1 until Radix).map(i => col(s"_saZ$i")),
         "_saNew", b, keep = Seq(col("doc"), col("off")))
       cur = numbered
         .select(col("doc"), col("off"), col("_saNew").as("rank"))
         .localCheckpoint(true)
       levels += cur
-      k *= radix
+      k *= Radix
       prevClasses = classes
       done = classes == n
     }
@@ -330,6 +320,11 @@ object SuffixArray {
     suffixRanksAll(docs, id, text, buckets).full
       .select(col("doc").as("doc_id"), col("off").cast("long").as("off"),
         col("rank").as("srank"))
+
+  /** Position count at which [[repeatedSpans]]' LCP walk switches to
+    * the lead form (default 2^20).
+    */
+  val WalkLeadConf = "spark.graft.sa.walkLeadMinPositions"
 
   /** Every maximal repeated token span of length ≥ `minLen`, reported as
     * SA-adjacent suffix pairs with their EXACT token-level LCP:
@@ -358,6 +353,12 @@ object SuffixArray {
   def repeatedSpans(docs: DataFrame, id: String, text: String,
       minLen: Int, buckets: Int = 0): DataFrame = {
     require(minLen >= 1, s"need minLen >= 1, got $minLen")
+    // parsed before the construction so a malformed value fails fast
+    val leadThreshold = docs.sparkSession.conf
+      .getOption(WalkLeadConf).map { v =>
+        v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+          s"$WalkLeadConf must be a whole number of positions, got '$v'"))
+      }.getOrElse(1L << 20)
     val ranked = suffixRanksAll(docs, id, text, buckets)
     // prefilter: lcp ≥ minLen forces the composed minLen-token windows
     // equal, witnessed by level-jPre ranks at offsets covering
@@ -452,11 +453,8 @@ object SuffixArray {
     //    level fits a few tasks — sf0.1: 11.9 → 13.5 s the wrong way.
     //
     // The switch is input-derived (positions ≥ ~1M ⇒ lead), overridable
-    // via spark.graft.sa.walkLeadMinPositions for tests/deployments; at
+    // via [[WalkLeadConf]] for tests/deployments; at
     // the 100 TB target the lead form is always selected.
-    val leadThreshold = docs.sparkSession.conf
-      .getOption("spark.graft.sa.walkLeadMinPositions")
-      .map(_.toLong).getOrElse(1L << 20)
     val useLead = ranked.positions >= leadThreshold
     val walked = ranked.levels.zipWithIndex
       .filter { case (_, j) => (1L << (2 * j)) <= math.max(ranked.maxLen, 1L) }

@@ -33,7 +33,7 @@ final class StoreRegistry(spark: SparkSession) {
     * latest `ord` wins. `localCheckpoint` truncates lineage so a
     * long-running query doesn't accrete one union per batch; the durable
     * production form of this is a MERGE into a transactional table or the
-    * state store itself ([[graft.streaming.StreamingState.latestByKey]]).
+    * state store itself ([[graft.streaming.StreamingStateV2.latestByKey]]).
     */
   def upsert(name: String, batch: DataFrame, keyCols: Seq[String], ord: Seq[Column]): Unit = {
     val merged = stores.get(name) match {

@@ -60,12 +60,6 @@ object Resilience {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Wrap a foreachBatch body with bounded retries. */
-  def foreachBatchWithRetry(
-      attempts: Int = 2, intervalMs: Long = 100)(
-      body: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
-    (batch, id) => withRetries(attempts, intervalMs)(body(batch, id))
-
   /** Per-record error capture — the reference's full DLQ semantics
     * (kstream/processor.go:116-152: retry the record, then ship it to the
     * DLQ topic with the error; dlq/dlq.go:14-87): retry the WHOLE batch

@@ -22,6 +22,14 @@ final case class KRecord(key: String, ord: Long, value: String, version: Long = 
   * Scale: state is partitioned by key hash across executors; each trigger
   * touches only keys with new data. TTL ⇒ `GroupStateTimeout` (the
   * reference's per-record expiry, backend/backend.go:14-28).
+  *
+  * The `transformWithState` forms in [[StreamingStateV2]] carry the same
+  * semantics (spec-checked row for row), but these forms stay: they are
+  * the only ones that run on Spark's default HDFS state store provider,
+  * where `transformWithState` fails with
+  * `STATE_STORE_MULTIPLE_COLUMN_FAMILIES`. TTL differs on purpose:
+  * [[latestByKeyWithTTL]] emits an expiry tombstone so downstream stores
+  * delete too, while the V2 store-enforced TTL deletes silently.
   */
 object StreamingState {
 

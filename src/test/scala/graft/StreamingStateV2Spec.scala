@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{KRecord, StreamingStateV2}
+import graft.streaming.{KRecord, StreamingState, StreamingStateV2}
 
 /** The transformWithState (Spark 4 arbitrary-state API) forms, run on the
   * RocksDB state store provider they require — semantics must match the
@@ -38,6 +39,38 @@ class StreamingStateV2Spec extends SparkSpec {
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     name
+  }
+
+  /** Sink rows of `form` over `batches`, in a stable order. */
+  private def outputs(form: Dataset[KRecord] => Dataset[KRecord])(
+      batches: Seq[KRecord]*): Seq[KRecord] = {
+    val mem = MemoryStream[KRecord]
+    val name = run(mem, form(mem.toDS()))(batches: _*)
+    spark.table(name).as[KRecord].collect().toSeq
+      .sortBy(r => (r.key, r.ord, r.version, Option(r.value)))
+  }
+
+  test("mapGroupsWithState and transformWithState forms emit identical rows") {
+    val latest = Seq(
+      Seq(KRecord("a", 1, "a1"), KRecord("b", 1, "b1")),
+      Seq(KRecord("a", 2, "a2"), KRecord("a", 0, "stale"), KRecord("c", 1, "c1")),
+      // tombstone for b; a's equal-ord arrival keeps the stored record
+      Seq(KRecord("b", 9, null), KRecord("a", 2, "a2-tie")),
+      Seq(KRecord("b", 3, "b-after-delete")))
+    val v1Latest = outputs(StreamingState.latestByKey)(latest: _*)
+    assert(v1Latest.contains(KRecord("b", 9, null)))
+    assert(v1Latest.count(_ == KRecord("a", 2, "a2")) === 2)
+    assert(outputs(ds => StreamingStateV2.latestByKey(ds))(latest: _*) === v1Latest)
+
+    val versioned = Seq(
+      Seq(KRecord("k", 1, "v1", version = 5), KRecord("j", 1, "j1", version = 1)),
+      // equal version ⇒ k keeps v1; lower version ⇒ j keeps j1
+      Seq(KRecord("k", 2, "same-version", version = 5),
+        KRecord("j", 2, "j-old", version = 0)),
+      Seq(KRecord("k", 3, "v2", version = 6), KRecord("j", 3, null, version = 2)))
+    val v1Versioned = outputs(StreamingState.versionedUpsert)(versioned: _*)
+    assert(v1Versioned.filter(_.key == "k").map(_.value) === Seq("v1", "v1", "v2"))
+    assert(outputs(StreamingStateV2.versionedUpsert)(versioned: _*) === v1Versioned)
   }
 
   test("transformWithState latestByKey: newest wins, tombstone deletes") {

@@ -68,20 +68,6 @@ class SuffixArraySpec extends SparkSpec {
     assert(got === bruteRanks(corpus))
   }
 
-  test("suffixRanksRadix: radix 8 (and 2) full ranks equal the radix-4 production ranks") {
-    // the probe-only radices must agree with production rank-for-rank —
-    // the doubling recurrence's fixed point is radix-independent
-    val corpus = randomCorpus(7, 22)
-    def ranks(radix: Int) = SuffixArray.suffixRanksRadix(
-        corpus.toDF("doc_id", "text"), "doc_id", "text",
-        buckets = 7, maxPrefix = Long.MaxValue, radix = radix)
-      .full.as[(Long, Long, Long)].collect()
-      .map { case (d, o, r) => (d, o) -> r }.toMap
-    val r4 = ranks(4)
-    assert(ranks(8) === r4)
-    assert(ranks(2) === r4)
-  }
-
   test("repeatedSpans equals brute-force adjacent-LCP at two thresholds, " +
       "including equal-suffix overshoot capping") {
     val corpus = randomCorpus(11, 25)
@@ -124,6 +110,12 @@ class SuffixArraySpec extends SparkSpec {
           .as[(Long, Long, Long, Long, Long)].collect().toSet
         assert(spans === bruteSpans(Seq((1L, t), (2L, t)), 1), s"len=$len")
       }
+      // a malformed threshold fails before any construction, naming its key
+      spark.conf.set(SuffixArray.WalkLeadConf, "abc")
+      val bad = intercept[IllegalArgumentException](SuffixArray.repeatedSpans(
+        corpus.toDF("doc_id", "text"), "doc_id", "text", minLen = 2))
+      assert(bad.getMessage.contains("spark.graft.sa.walkLeadMinPositions"))
+      assert(bad.getMessage.contains("abc"))
     } finally spark.conf.unset("spark.graft.sa.walkLeadMinPositions")
   }
 

@@ -12,8 +12,9 @@ Usage:
 
 Checks:
   - the artifact parses, carries metric/value/unit/n_queries/queries/
-    failed/stat/sf, n_queries == len(queries), and value ~= sum of the
-    non-failed per-query seconds;
+    failed/stat/sf, n_queries == len(queries), no query outside
+    `failed` has a negative duration, and value ~= sum of the non-failed
+    per-query seconds;
   - if a sweep log is given, its LAST stdout line starting with
     '{"metric"' parses, is <= 2000 chars (the driver's stdout window),
     carries the same total/n_queries as the artifact, and its "full"
@@ -47,7 +48,11 @@ def load_artifact(path):
         fail(f"artifact {path}: n_queries={doc['n_queries']} but "
              f"len(queries)={len(q)}")
     failed = set(doc["failed"])
-    total = sum(v for k, v in q.items() if k not in failed and v >= 0)
+    for k, v in q.items():
+        if k not in failed and v < 0:
+            fail(f"artifact {path}: query {k} has negative duration {v} "
+                 "but is not listed in 'failed'")
+    total = sum(v for k, v in q.items() if k not in failed)
     if not math.isclose(total, doc["value"], rel_tol=1e-6, abs_tol=0.01):
         fail(f"artifact {path}: value={doc['value']} != sum(queries)={total}")
     return doc
